@@ -23,7 +23,7 @@ Methodology (round-3/4/5 verdicts):
   sample (q1's first cold sample read 6.4 s vs 0.88/0.82 in round 4).
 - **Hygiene**: cache/broadcast/Python-worker state left by one query
   inflated the next one's reading by up to 2×, so every timed run starts
-  from a cleared cache and cleared feed/cascade/CC memos.
+  from a cleared cache and a cleared session memo.
 - **Adaptive median cold**: iterative/codegen-heavy entries (dedup_clusters
   measured 9.5 vs 31.4 s in back-to-back runs) make a single cold sample
   untrustworthy; each entry — headline, scale-path AND extension — is timed
@@ -36,7 +36,7 @@ Methodology (round-3/4/5 verdicts):
   BASELINE.md applies to) is the sum of median-cold runs — the cost a fresh
   session pays per query with nothing shared.  ``value_warm`` sums one
   in-process re-run per query with plan/JIT state AND the Python-side
-  feed/cascade memos left hot — deliberately: a long-lived session keeps
+  session memo left hot — deliberately: a long-lived session keeps
   its memos, so the warm number measures the steady state such a session
   actually pays (round-4 advisory asked the docstring to match the code;
   the code is what's intended).
@@ -54,16 +54,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _reset(spark):
-    """Clear cross-query state so each entry is measured cold: cached
-    feeds/bands/CC labels from previous entries would turn downstream scans
-    into memory reads and upstream ones into cache-build overhead."""
+    """Clear cross-query state so each entry is measured cold: the one
+    session memo (``feeds.session_memo_clear``) holds the cached feeds,
+    cascades, CC labels and shared checkpointed frames of previous
+    entries, which would turn downstream scans into memory reads and
+    upstream ones into cache-build overhead."""
     import gc
 
     spark.catalog.clearCache()
-    from mistocksync_spark.plans import feeds, queries
+    from mistocksync_spark.plans.feeds import session_memo_clear
 
-    feeds._FEED_MEMO.clear()
-    queries._cascade_memo_clear()
+    session_memo_clear()
     # the memos hold localCheckpoint()ed frames whose executor blocks are
     # only released when the JVM ContextCleaner sees the RDD refs die —
     # force the Python side promptly, or dead checkpoint blocks from

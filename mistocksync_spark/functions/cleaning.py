@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mistocksync_spark.functions.exprmemo import memoized_column
+from mistocksync_spark.functions.exprmemo import memoized
 
 
 def strip_ws(col: Column) -> Column:
@@ -22,7 +22,7 @@ def strip_ws(col: Column) -> Column:
     return F.regexp_replace(col, r"^\s+|\s+$", "")
 
 
-@memoized_column
+@memoized
 def clean_invisible_chars(col: Column) -> Column:
     """Collapse internal whitespace runs to single spaces, trim ends;
     null/empty → null.  (ref main.py:1262-1272: ``" ".join(s.split())``)"""
@@ -39,7 +39,7 @@ def _prepped_article(col: Column) -> Column:
     return F.when(s.startswith("000"), F.substring(s, 4, 2147483647)).otherwise(s)
 
 
-@memoized_column
+@memoized
 def clean_article_vitya(col: Column) -> Column:
     """Vitya article cleaner → always integer (LongType, null on null input).
 
@@ -54,7 +54,7 @@ def clean_article_vitya(col: Column) -> Column:
     return F.when(s.isNull(), F.lit(None).cast("long")).otherwise(out)
 
 
-@memoized_column
+@memoized
 def clean_article_dimi(col: Column) -> Column:
     """Dimi article cleaner → keeps the **string** SKU (alphanumeric allowed).
 
@@ -65,7 +65,7 @@ def clean_article_dimi(col: Column) -> Column:
     return F.nullif(s, F.lit(""))
 
 
-@memoized_column
+@memoized
 def safe_color(col: Column) -> Column:
     """Null-safe color normalizer → lowercase trimmed string, with
     null / '' / 'nan' / 'none' collapsing to '' (ref main.py:2037-2055)."""

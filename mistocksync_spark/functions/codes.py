@@ -25,7 +25,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from mistocksync_spark.functions.cleaning import strip_ws
-from mistocksync_spark.functions.exprmemo import memoized_column
+from mistocksync_spark.functions.exprmemo import memoized
 
 BRANDS = ["GREENOE", "XIAOMI", "SAMSUNG", "APPLE", "HUAWEI", "OPPO", "VIVO", "ONEPLUS"]
 
@@ -43,7 +43,7 @@ CODE_PATTERNS = [
 ]
 
 
-@memoized_column
+@memoized
 def bracket_code(name: Column) -> Column:
     """First parenthesized token, uppercased; valid only if it is purely
     [Latin|Cyrillic|digit|-] and length ≥ 4 (ref main.py:1640-1666)."""
@@ -64,7 +64,7 @@ def _not_excluded(m: Column) -> Column:
     )
 
 
-@memoized_column
+@memoized
 def product_code_in_name(name: Column) -> Column:
     """Ordered multi-pattern extractor: for each pattern (priority order) take
     the first match that survives the exclusion rules (ref main.py:1591-1638)."""
@@ -86,7 +86,7 @@ def product_code_in_name(name: Column) -> Column:
     return F.when(name.isNull(), F.lit(None).cast("string")).otherwise(result)
 
 
-@memoized_column
+@memoized
 def battery_capacity(name: Column) -> Column:
     """Battery capacity (mAh) as a **string** of the captured digits.
 
@@ -104,7 +104,7 @@ def battery_capacity(name: Column) -> Column:
     return F.coalesce(*candidates, F.lit(None).cast("string"))
 
 
-@memoized_column
+@memoized
 def product_code_unified(name: Column) -> Column:
     """Priority: bracket code → first known brand contained in the name →
     general name code if length ≥ 4 (ref main.py:1712-1750)."""

@@ -11,17 +11,16 @@ A ``Column`` is an immutable, unresolved expression tree with no binding
 to any DataFrame or plan, so the SAME Column object can be reused across
 queries — the established pattern for module-level Column constants (and
 this repo's memoized pandas_udf objects).  This decorator caches the
-built tree per (active SparkContext, input-expression string, extra
-args).  It caches no data, no results, and no plan state: a fresh query
-gets a bit-identical expression tree, merely without re-paying the py4j
-chatter to rebuild it — which is also why it deliberately survives the
-bench's ``_reset`` (that clears DATA caches so entries are measured
-cold; the expression memo is syntax, not state).
+built tree per (active SparkContext, rendered arguments).  It caches no
+data, no results, and no plan state: a fresh query gets a bit-identical
+expression tree, merely without re-paying the py4j chatter to rebuild
+it — which is also why it deliberately survives the bench's ``_reset``
+(that clears DATA caches so entries are measured cold; the expression
+memo is syntax, not state).
 
-The SparkContext itself is held in the memo value so CPython cannot
-recycle its ``id()`` for a later context while entries are alive; a
-restarted session therefore always misses and rebuilds against the new
-JVM."""
+The key holds the SparkContext object itself, never its ``id()``, so a
+restarted session always misses and rebuilds against the new JVM.  The
+undecorated builder stays reachable as ``fn.__wrapped__``."""
 
 from __future__ import annotations
 
@@ -29,53 +28,21 @@ import functools
 
 from pyspark.sql import Column
 
-#: measurement kill switch: True bypasses every memo (used by the A/B
-#: harness to time construction-per-call vs construction-once in one
-#: interleaved session; never set in production paths)
-DISABLED = False
+
+def _key_part(v):
+    # Columns are identity-hashed; key them by their rendered expression
+    # so equal trees hit the same entry
+    return str(v) if isinstance(v, Column) else v
 
 
-def memoized_column(fn):
-    """Decorator for pure ``Column -> Column`` builders (extra positional/
-    keyword args allowed if hashable).  The cache key is the *rendered
-    expression string* of the input column — two Columns that print the
-    same unresolved expression are the same tree semantically."""
-    memo: dict = {}
-
-    def _key_part(v):
-        # Columns are identity-hashed; key them by their rendered
-        # expression so equal trees hit the same entry
-        return str(v) if isinstance(v, Column) else v
-
-    @functools.wraps(fn)
-    def wrapper(col: Column, *args, **kwargs):
-        from pyspark import SparkContext
-
-        sc = SparkContext._active_spark_context
-        if DISABLED or sc is None:
-            return fn(col, *args, **kwargs)
-        key = (
-            id(sc),
-            _key_part(col),
-            tuple(_key_part(a) for a in args),
-            tuple(sorted((k, _key_part(v)) for k, v in kwargs.items())),
-        )
-        hit = memo.get(key)
-        if hit is not None and hit[0] is sc:
-            return hit[1]
-        built = fn(col, *args, **kwargs)
-        memo[key] = (sc, built)
-        return built
-
-    return wrapper
-
-
-def memoized_exprs(fn):
-    """Memoize a builder whose inputs are plain hashable args (no Column
-    inputs) and whose output is a Column or a tuple/list of Columns bound
-    to FIXED column names — e.g. the 60-term simhash vote expressions,
-    which depend only on ``nbits``.  Same contract and caveats as
-    ``memoized_column``."""
+def memoized(fn):
+    """Decorator for pure Column builders: ``Column -> Column`` extractors,
+    or builders of plain hashable args whose output is a Column or a
+    tuple/list of Columns bound to FIXED column names (e.g. the 60-term
+    simhash vote expressions, which depend only on ``nbits``).  Column
+    arguments are keyed by their rendered expression string — two Columns
+    that print the same unresolved expression are the same tree
+    semantically; other arguments must be hashable."""
     memo: dict = {}
 
     @functools.wraps(fn)
@@ -83,14 +50,15 @@ def memoized_exprs(fn):
         from pyspark import SparkContext
 
         sc = SparkContext._active_spark_context
-        if DISABLED or sc is None:
+        if sc is None:
             return fn(*args, **kwargs)
-        key = (id(sc), args, tuple(sorted(kwargs.items())))
-        hit = memo.get(key)
-        if hit is not None and hit[0] is sc:
-            return hit[1]
-        built = fn(*args, **kwargs)
-        memo[key] = (sc, built)
-        return built
+        key = (
+            sc,
+            tuple(_key_part(a) for a in args),
+            tuple(sorted((k, _key_part(v)) for k, v in kwargs.items())),
+        )
+        if key not in memo:
+            memo[key] = fn(*args, **kwargs)
+        return memo[key]
 
     return wrapper

@@ -45,21 +45,19 @@ def perform_comparison(
     base_price: str,
     supplier_order: str = "row_id",
     base_order: str = "row_id",
-    cache: bool = True,
 ) -> dict[str, DataFrame]:
     """Run the four-stage cascade; returns a dict of result DataFrames
     mirroring the reference's ``comparison_result`` record lists."""
-    if cache:
-        # Persist boundaries serve two purposes: stages 2-4 reuse stage-1
-        # results instead of recomputing the whole upstream chain, AND the
-        # regex-heavy derived-column projections (article cleaners, C3-C5
-        # code extractors) are materialized *before* any sort/window stage —
-        # without the boundary whole-stage codegen inlines them into the
-        # sort method, blows the JVM 64KB method limit, and falls back to
-        # interpreted evaluation.  At cluster scale the same boundary is an
-        # exchange-reuse / checkpoint point.
-        supplier = supplier.cache()
-        base = base.cache()
+    # Persist boundaries serve two purposes: stages 2-4 reuse stage-1
+    # results instead of recomputing the whole upstream chain, AND the
+    # regex-heavy derived-column projections (article cleaners, C3-C5
+    # code extractors) are materialized *before* any sort/window stage —
+    # without the boundary whole-stage codegen inlines them into the
+    # sort method, blows the JVM 64KB method limit, and falls back to
+    # interpreted evaluation.  At cluster scale the same boundary is an
+    # exchange-reuse / checkpoint point.
+    supplier = supplier.cache()
+    base = base.cache()
     stage1 = matching.exact_article_match(
         supplier,
         base,
@@ -70,9 +68,7 @@ def perform_comparison(
         supplier_order=supplier_order,
         base_order=base_order,
     )
-    new_items = stage1["new_items"]
-    if cache:
-        new_items = new_items.cache()
+    new_items = stage1["new_items"].cache()
 
     # F8: stages 2-3 only look at supplier rows whose article is a stage-1
     # miss (ref main.py:2289-2304, 2566-2581).
@@ -81,24 +77,17 @@ def perform_comparison(
         new_items,
         key="__key",
         allowed_key="article",
-    ).drop("__key")
-    if cache:
-        sup_new = sup_new.cache()
+    ).drop("__key").cache()
 
     def _variants(code_fn):
         sup_var = supplier_code_variants(
             sup_new, code_fn, supplier_article, price_col=supplier_price, order_col=supplier_order
         )
         base_var = base_code_variants(base, code_fn, base_price, order_col=base_order)
-        if cache:
-            sup_var, base_var = sup_var.cache(), base_var.cache()
-        return sup_var, base_var
+        return sup_var.cache(), base_var.cache()
 
-    bracket_matches = code_match(*_variants(bracket_code), match_type="bracket_code")
-    code_matches = code_match(*_variants(product_code_unified), match_type="product_code")
-    if cache:
-        bracket_matches = bracket_matches.cache()
-        code_matches = code_matches.cache()
+    bracket_matches = code_match(*_variants(bracket_code), match_type="bracket_code").cache()
+    code_matches = code_match(*_variants(product_code_unified), match_type="product_code").cache()
 
     residual = anti_filter_matched(
         new_items, bracket_matches, key="article", matched_key="supplier_article"

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mistocksync_spark.functions.exprmemo import memoized_exprs
+from mistocksync_spark.functions.exprmemo import memoized
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -85,7 +85,7 @@ def minhash_signatures(
     )
 
 
-@memoized_exprs
+@memoized
 def _minhash_exprs(num_hashes: int):
     """The per-seed min-hash aggregates and the unpivot explode, bound to
     the fixed ``shingle``/``mh{s}`` names — pure function of
@@ -190,7 +190,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", nbits
     return votes.select("doc_id", sig.alias("simhash"))
 
 
-@memoized_exprs
+@memoized
 def _simhash_exprs(nbits: int):
     """The nbits-term simhash expression set (contrib array, vote
     aggregates, signature fold), bound to the fixed ``token``/``c``/
@@ -1450,10 +1450,12 @@ def char_gram_positions(
     ``hashed=False`` emits the RAW window substring as ``g`` instead of
     its md5 (r17, guide §1.2 don't compute what you throw away): gram
     equality is all any consumer tests, raw equality is exact (md5 is
-    only injective-in-practice), and the raw key is no wider than the
-    32-hex digest while skipping one md5 per corpus character — measured
-    −17% on ``duplicated_span_coverage`` at sf0.1, outputs bit-identical
-    (exceptAll 0 both directions).  Callers that PERSIST ``g`` (the
+    only injective-in-practice), and it skips one md5 per corpus
+    character — measured −17% on ``duplicated_span_coverage`` on the
+    sf0.1 corpus, outputs bit-identical (exceptAll 0 both directions).
+    The raw key is not always narrower than the 32-hex digest: UTF-8
+    takes 2 bytes per Cyrillic character, so a Cyrillic 30-char gram is
+    up to 60 bytes.  Callers that PERSIST ``g`` (the
     prepare ticks' gram state) or subsample on the digest's hex prefix
     (the anchored span family: ``substring(g, 1, 1) ∈ anchor_hex`` must
     be a content-independent 1/8 sample, which raw text prefixes are

@@ -24,10 +24,10 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mistocksync_spark.functions.exprmemo import memoized_column
+from mistocksync_spark.functions.exprmemo import memoized
 
 
-@memoized_column
+@memoized
 def _to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
@@ -41,7 +41,7 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-@memoized_column
+@memoized
 def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(_to_double(a), F.lit(0.0), lambda acc, x: acc + x * x))
 
@@ -262,7 +262,7 @@ def cosine_contamination(
     return src.mapInPandas(score, out_schema)
 
 
-@memoized_column
+@memoized
 def unrolled_dot(a: Column, b: Column, dim: int) -> Column:
     """Fixed-dimension dot product as a flat expression chain.
 

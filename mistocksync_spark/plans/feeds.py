@@ -15,6 +15,8 @@ both), ``CAST(x AS STRING)``, ``floor`` (double in both), integer ``%``,
 both engines compute bit-identical values (no round-half differences).
 """
 
+import functools
+
 # Vitya-shaped supplier price list.  Columns mirror FIXTURES.md §2:
 #  - article_raw exercises the C2 cleaner ('-prefix, 000-prefix, digit-run
 #    concatenation AB..C.. → concatenated digits)
@@ -220,45 +222,55 @@ def docs_para(spark, sf_dir: str):
     return spark.sql(DOCS_PARA_SQL)
 
 
-def register_feeds(spark, sf_dir: str) -> None:
-    """Register ``part`` plus the derived supplier/base feeds as temp views."""
+# Per-(session, sf_dir) memo for everything the registry builds once and
+# shares across entries: the feeds below, the matching cascades, the CC
+# labels and the shared checkpointed producers in ``queries``.  Keys hold
+# the session object itself, never its ``id()``, so a restarted session
+# cannot be handed a frame from a dead one.  bench.py's ``_reset`` clears
+# it between entries so each reading stays cold.
+_SESSION_MEMO: dict = {}
+
+
+def session_memo(fn):
+    """Decorator for ``fn(spark, sf_dir, *args, **kwargs)`` builders: the
+    first call per (fn, session, sf_dir, remaining args as passed) builds,
+    later calls return the same object until ``session_memo_clear()``."""
+
+    @functools.wraps(fn)
+    def wrapper(spark, sf_dir: str, *args, **kwargs):
+        key = (fn, spark, sf_dir, args, tuple(sorted(kwargs.items())))
+        if key not in _SESSION_MEMO:
+            _SESSION_MEMO[key] = fn(spark, sf_dir, *args, **kwargs)
+        return _SESSION_MEMO[key]
+
+    return wrapper
+
+
+def session_memo_clear() -> None:
+    _SESSION_MEMO.clear()
+
+
+# The synthetic-quirk projections are huge expression trees; without a
+# shared cache every parity query re-derives them and projection collapse
+# duplicates them past the JVM 64KB codegen method limit (interpreted
+# fallback + a failed janino compile per stage).  One cached
+# materialization per session sidesteps both.  This is a test-fixture
+# concern — the feeds exist only to mirror the DuckDB oracle input.
+def _feed(spark, sf_dir: str, sql: str):
     import os
 
     spark.read.parquet(os.path.join(sf_dir, "part.parquet")).createOrReplaceTempView("part")
-    spark.sql(SUPPLIER_FEED_SQL).createOrReplaceTempView("supplier_feed")
-    spark.sql(BASE_FEED_SQL).createOrReplaceTempView("base_feed")
+    return spark.sql(sql).cache()
 
 
-# Per-(session, sf_dir) feed memo.  The synthetic-quirk projections are huge
-# expression trees; without a shared cache every parity query re-derives
-# them and projection collapse duplicates them past the JVM 64KB codegen
-# method limit (interpreted fallback + a failed janino compile per stage).
-# One cached materialization per session sidesteps both.  This is a test-
-# fixture concern — the feeds exist only to mirror the DuckDB oracle input.
-_FEED_MEMO: dict = {}
-
-
-def _memo_feed(spark, sf_dir: str, which: str, sql: str):
-    import os
-
-    key = (spark, sf_dir, which)
-    if key not in _FEED_MEMO:
-        spark.read.parquet(os.path.join(sf_dir, "part.parquet")).createOrReplaceTempView("part")
-        _FEED_MEMO[key] = spark.sql(sql).cache()
-    return _FEED_MEMO[key]
-
-
+@session_memo
 def supplier_feed(spark, sf_dir: str):
-    return _memo_feed(spark, sf_dir, "sup", SUPPLIER_FEED_SQL)
+    return _feed(spark, sf_dir, SUPPLIER_FEED_SQL)
 
 
+@session_memo
 def base_feed(spark, sf_dir: str):
-    return _memo_feed(spark, sf_dir, "base", BASE_FEED_SQL)
-
-
-def feed_ctes() -> str:
-    """CTE prefix reused by every DuckDB oracle."""
-    return f"WITH supplier_feed AS ({SUPPLIER_FEED_SQL}), base_feed AS ({BASE_FEED_SQL})"
+    return _feed(spark, sf_dir, BASE_FEED_SQL)
 
 
 # Embeddings corpus augmented with planted duplicates: exact copies and

@@ -30,7 +30,13 @@ from mistocksync_spark.functions.numeric import dec_avg, dec_sum, sql_dec_avg, s
 from mistocksync_spark.operators import aggregates as agg
 from mistocksync_spark.operators import filters as flt
 from mistocksync_spark.operators import matching
-from mistocksync_spark.plans.feeds import BASE_FEED_SQL, SUPPLIER_FEED_SQL, base_feed, supplier_feed
+from mistocksync_spark.plans.feeds import (
+    BASE_FEED_SQL,
+    SUPPLIER_FEED_SQL,
+    base_feed,
+    session_memo,
+    supplier_feed,
+)
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -528,44 +534,26 @@ def _sql_code_cascade(
     )
 
 
-# Memoized per (session, sf_dir, variant): five J1–J3 queries share one
-# cascade, and re-running `perform_comparison(cache=True)` per query
-# re-cached identical lineages ("Asked to cache already cached data" spam
-# in the round-2 driver tail).  bench.py clears this between entries so
-# each bench reading stays cold.
-_CASCADE_MEMO: dict = {}
-
-# Memoized materialized CC label frame per (session, sf_dir): the
-# clusters/histogram/survivors family shares ONE connected-components run —
-# CC ends in a localCheckpoint, so the memoized frame is already
-# materialized and each sibling query pays only its own joins/groupBys
-# (round-4 verdict #3: the histogram re-derived pairs + CC, 79 s vs 12 s).
-# bench.py's _reset clears this too, so cold readings stay cold.
-_CC_MEMO: dict = {}
-
-
-def _cascade_memo_clear() -> None:
-    _CASCADE_MEMO.clear()
-    _CC_MEMO.clear()
-
-
+@session_memo
 def _simhash_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-components labels over the SimHash near-dup pairs
-    (max_hamming=3), materialized once per (session, sf_dir)."""
-    key = (id(spark), sf_dir, "simhash_cc")
-    if key not in _CC_MEMO:
-        from mistocksync_spark.operators.dedup import (
-            connected_components,
-            simhash,
-            simhash_near_dup_pairs,
-        )
-        from mistocksync_spark.plans.feeds import docs_aug
+    (max_hamming=3), materialized once per (session, sf_dir): the
+    clusters/histogram/survivors family shares ONE connected-components
+    run — CC ends in a localCheckpoint, so the memoized frame is already
+    materialized and each sibling query pays only its own joins/groupBys
+    (round-4 verdict #3: the histogram re-derived pairs + CC, 79 s vs 12 s)."""
+    from mistocksync_spark.operators.dedup import (
+        connected_components,
+        simhash,
+        simhash_near_dup_pairs,
+    )
+    from mistocksync_spark.plans.feeds import docs_aug
 
-        pairs = simhash_near_dup_pairs(simhash(docs_aug(spark, sf_dir)), max_hamming=3)
-        _CC_MEMO[key] = connected_components(pairs)
-    return _CC_MEMO[key]
+    pairs = simhash_near_dup_pairs(simhash(docs_aug(spark, sf_dir)), max_hamming=3)
+    return connected_components(pairs)
 
 
+@session_memo
 def _shingles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, shingle) table, lazily materialized once per
     (session, sf_dir) for the n-gram family (prefix-filter join,
@@ -574,15 +562,13 @@ def _shingles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     memo pattern as ``_minhash_pairs_shared``).  The headline
     ``ngram_jaccard_pairs`` entry stays unmemoized so its cold bench
     reading measures the full pipeline."""
-    key = (id(spark), sf_dir, "shingles")
-    if key not in _CC_MEMO:
-        from mistocksync_spark.operators.dedup import shingle_table
-        from mistocksync_spark.plans.feeds import docs_aug
+    from mistocksync_spark.operators.dedup import shingle_table
+    from mistocksync_spark.plans.feeds import docs_aug
 
-        _CC_MEMO[key] = shingle_table(docs_aug(spark, sf_dir)).localCheckpoint(eager=False)
-    return _CC_MEMO[key]
+    return shingle_table(docs_aug(spark, sf_dir)).localCheckpoint(eager=False)
 
 
+@session_memo
 def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs, lazily materialized once per
     (session, sf_dir) for the graph-analytics family (degrees, triangles,
@@ -590,28 +576,24 @@ def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpointed edge list instead of re-deriving shingle→minhash→
     band→join.  The headline ``minhash_lsh_pairs`` entry stays
     unmemoized so its cold bench reading measures the full pipeline."""
-    key = (id(spark), sf_dir, "minhash_pairs")
-    if key not in _CC_MEMO:
-        _CC_MEMO[key] = QUERIES["minhash_lsh_pairs"](spark, sf_dir).localCheckpoint(eager=False)
-    return _CC_MEMO[key]
+    return QUERIES["minhash_lsh_pairs"](spark, sf_dir).localCheckpoint(eager=False)
 
 
+# Memoized per (session, sf_dir): five J1–J3 queries share one cascade, and
+# re-running `perform_comparison` per query re-cached identical lineages
+# ("Asked to cache already cached data" spam in the round-2 driver tail).
+@session_memo
 def _cascade(spark: SparkSession, sf_dir: str):
     from mistocksync_spark.operators.cascade import perform_comparison
 
-    key = (id(spark), sf_dir, "vitya")
-    if key not in _CASCADE_MEMO:
-        sup = _preprocess_vitya(supplier_feed(spark, sf_dir))
-        _CASCADE_MEMO[key] = perform_comparison(
-            sup,
-            base_feed(spark, sf_dir),
-            supplier_article="article_vitya",
-            supplier_price="price_usd",
-            base_article="article_vitya",
-            base_price="price_vitya_usd",
-            cache=True,
-        )
-    return _CASCADE_MEMO[key]
+    return perform_comparison(
+        _preprocess_vitya(supplier_feed(spark, sf_dir)),
+        base_feed(spark, sf_dir),
+        supplier_article="article_vitya",
+        supplier_price="price_usd",
+        base_article="article_vitya",
+        base_price="price_vitya_usd",
+    )
 
 
 @query("bracket_code_match", _sql_code_cascade(lambda c: _SQL_BRACKET.format(col=c), "bracket_code"))
@@ -689,6 +671,7 @@ def new_items_for_base_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # J4/J5 fuzzy matching (difflib Ratcliff–Obershelp — not SQL-expressible,
 # rows-only driver check; exact parity is covered by tests/test_fuzzy.py)
 # --------------------------------------------------------------------------
+@session_memo
 def _cascade_hot(spark: SparkSession, sf_dir: str):
     """Cascade results with the cached stage boundaries eagerly materialized
     in dependency order.  The fuzzy queries consume the RESIDUAL, whose plan
@@ -700,11 +683,8 @@ def _cascade_hot(spark: SparkSession, sf_dir: str):
     exactly once; the counts themselves are the same jobs the monolithic
     action would run anyway."""
     r = _cascade(spark, sf_dir)
-    key = (id(spark), sf_dir, "vitya-hot")
-    if key not in _CASCADE_MEMO:
-        for k in ("new_items", "bracket_matches", "code_matches"):
-            r[k].count()
-        _CASCADE_MEMO[key] = True
+    for k in ("new_items", "bracket_matches", "code_matches"):
+        r[k].count()
     return r
 
 
@@ -4023,21 +4003,18 @@ def embedding_topk_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def _cascade_dimi(spark: SparkSession, sf_dir: str):
     from mistocksync_spark.operators.cascade import perform_comparison
 
-    key = (id(spark), sf_dir, "dimi")
-    if key not in _CASCADE_MEMO:
-        _CASCADE_MEMO[key] = perform_comparison(
-            _prep_dimi(spark, sf_dir),
-            base_feed(spark, sf_dir),
-            supplier_article="article_dimi",
-            supplier_price="price_usd",
-            base_article="article_dimi",
-            base_price="price_dimi_usd",
-            cache=True,
-        )
-    return _CASCADE_MEMO[key]
+    return perform_comparison(
+        _prep_dimi(spark, sf_dir),
+        base_feed(spark, sf_dir),
+        supplier_article="article_dimi",
+        supplier_price="price_usd",
+        base_article="article_dimi",
+        base_price="price_dimi_usd",
+    )
 
 
 def _sql_code_cascade_dimi(code_of, match_type: str) -> str:
@@ -5702,20 +5679,16 @@ def ngram_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_pairs(_shingles_shared(spark, sf_dir), 0.7)
 
 
+@session_memo
 def _triangles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-row triangle-count frame over the shared MinHash pair list,
     lazily materialized once per (session, sf_dir) — the clustering
     coefficient composes it with the degree/wedge pass instead of
     re-running the two-join closure (round-6 verdict ask #4, the same
     memo pattern as ``_simhash_cc_labels``)."""
-    key = (id(spark), sf_dir, "minhash_triangles")
-    if key not in _CC_MEMO:
-        from mistocksync_spark.operators.dedup import triangle_count
+    from mistocksync_spark.operators.dedup import triangle_count
 
-        _CC_MEMO[key] = triangle_count(
-            _minhash_pairs_shared(spark, sf_dir)
-        ).localCheckpoint(eager=False)
-    return _CC_MEMO[key]
+    return triangle_count(_minhash_pairs_shared(spark, sf_dir)).localCheckpoint(eager=False)
 
 
 @query("dedup_graph_triangles")
@@ -8107,6 +8080,7 @@ _SQL_ANCHOR_CAND = """
 """
 
 
+@session_memo
 def _span_positions_shared(
     spark: SparkSession, sf_dir: str, hashed: bool = True
 ) -> DataFrame:
@@ -8117,15 +8091,12 @@ def _span_positions_shared(
     memo entry with raw-substring grams (r17): the coverage entry only
     tests gram equality, while the anchored variants subsample on the
     digest hex prefix and must keep md5."""
-    key = (id(spark), sf_dir, "span_pos" if hashed else "span_pos_raw")
-    if key not in _CC_MEMO:
-        from mistocksync_spark.operators.dedup import char_gram_positions
-        from mistocksync_spark.plans.feeds import docs_span
+    from mistocksync_spark.operators.dedup import char_gram_positions
+    from mistocksync_spark.plans.feeds import docs_span
 
-        _CC_MEMO[key] = char_gram_positions(
-            docs_span(spark, sf_dir), gram_len=_SPAN_GRAM, hashed=hashed
-        ).localCheckpoint(eager=False)
-    return _CC_MEMO[key]
+    return char_gram_positions(
+        docs_span(spark, sf_dir), gram_len=_SPAN_GRAM, hashed=hashed
+    ).localCheckpoint(eager=False)
 
 
 @query(
@@ -8700,27 +8671,25 @@ def _sql_doc_clusters() -> tuple[list[str], str]:
     return blocks, "dassign"
 
 
+@session_memo
 def _doc_vec_shared(spark: SparkSession, sf_dir: str):
     """Memoized (vectors, term-weights, trained centroids) per
     (session, sf_dir) for the doc-clustering family — the three siblings
     share one featurization and one k-means fit."""
-    key = (id(spark), sf_dir, "doc_vecs")
-    if key not in _CC_MEMO:
-        from mistocksync_spark.operators.textual import (
-            hashed_tfidf_vectors,
-            tfidf_term_weights,
-        )
-        from mistocksync_spark.operators.vectors import ivf_train
+    from mistocksync_spark.operators.textual import (
+        hashed_tfidf_vectors,
+        tfidf_term_weights,
+    )
+    from mistocksync_spark.operators.vectors import ivf_train
 
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        tw = tfidf_term_weights(docs).localCheckpoint(eager=False)
-        vecs = hashed_tfidf_vectors(docs, dim=_DOC_VEC_DIM).localCheckpoint(eager=False)
-        cents = ivf_train(
-            vecs, n_centroids=_DOC_VEC_K, iterations=_DOC_VEC_ITERS,
-            vec_col="embedding", id_col="doc_id",
-        )
-        _CC_MEMO[key] = (vecs, tw, cents)
-    return _CC_MEMO[key]
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    tw = tfidf_term_weights(docs).localCheckpoint(eager=False)
+    vecs = hashed_tfidf_vectors(docs, dim=_DOC_VEC_DIM).localCheckpoint(eager=False)
+    cents = ivf_train(
+        vecs, n_centroids=_DOC_VEC_K, iterations=_DOC_VEC_ITERS,
+        vec_col="embedding", id_col="doc_id",
+    )
+    return vecs, tw, cents
 
 
 @query(

@@ -1,11 +1,9 @@
 """Pin the expression-construction memo (r17): same input expression →
 the SAME Column object back (construction paid once); different inputs or
-a disabled switch → fresh construction; and the memoized extractors still
-compute identical results to their undecorated bodies."""
+a call through ``__wrapped__`` → fresh construction; and the memoized
+extractors still compute identical results to their undecorated bodies."""
 
 from pyspark.sql import functions as F
-
-from mistocksync_spark.functions import exprmemo
 
 
 def test_memo_returns_same_object_for_equal_input(spark):
@@ -21,16 +19,12 @@ def test_memo_returns_same_object_for_equal_input(spark):
 def test_memo_disabled_bypasses(spark):
     from mistocksync_spark.functions.codes import battery_capacity
 
-    exprmemo.DISABLED = True
-    try:
-        a = battery_capacity(F.col("name"))
-        b = battery_capacity(F.col("name"))
-        assert a is not b
-    finally:
-        exprmemo.DISABLED = False
+    a = battery_capacity.__wrapped__(F.col("name"))
+    b = battery_capacity.__wrapped__(F.col("name"))
+    assert a is not b
 
 
-def test_memoized_exprs_returns_same_tuple_for_equal_args(spark):
+def test_memoized_returns_same_tuple_for_equal_args(spark):
     from mistocksync_spark.operators.dedup import _simhash_exprs
 
     a = _simhash_exprs(60)
@@ -40,19 +34,16 @@ def test_memoized_exprs_returns_same_tuple_for_equal_args(spark):
     assert c is not a
 
 
-def test_simhash_memoized_vs_bypassed_identical(spark):
-    from mistocksync_spark.operators.dedup import simhash
+def test_simhash_memoized_vs_bypassed_identical(spark, monkeypatch):
+    from mistocksync_spark.operators import dedup
 
     df = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "other words here"), (4, None)],
         "doc_id long, text string",
     ).filter("text is not null")
-    memod = sorted(simhash(df).collect())
-    exprmemo.DISABLED = True
-    try:
-        plain = sorted(simhash(df).collect())
-    finally:
-        exprmemo.DISABLED = False
+    memod = sorted(dedup.simhash(df).collect())
+    monkeypatch.setattr(dedup, "_simhash_exprs", dedup._simhash_exprs.__wrapped__)
+    plain = sorted(dedup.simhash(df).collect())
     assert memod == plain
 
 
@@ -68,9 +59,5 @@ def test_memoized_and_bypassed_trees_compute_identically(spark):
     ]
     df = spark.createDataFrame(rows, "name string")
     memod = df.select(product_code_unified(F.col("name")).alias("c")).collect()
-    exprmemo.DISABLED = True
-    try:
-        plain = df.select(product_code_unified(F.col("name")).alias("c")).collect()
-    finally:
-        exprmemo.DISABLED = False
+    plain = df.select(product_code_unified.__wrapped__(F.col("name")).alias("c")).collect()
     assert memod == plain

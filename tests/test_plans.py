@@ -197,7 +197,19 @@ def test_report_sheets_broadcast_the_matched_side(spark, name):
     assert "SortMergeJoin" not in plan
 
 
-def test_registry_wide_scalar_output_surface(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_frames(spark, sf_dir):
+    """Every registry entry except the streaming ones (building those
+    starts real streams), built once and shared by the two registry-wide
+    checks below."""
+    from mistocksync_spark.plans.queries import QUERIES
+
+    return {
+        name: fn(spark, sf_dir) for name, fn in QUERIES.items() if "_stream" not in name
+    }
+
+
+def test_registry_wide_scalar_output_surface(registry_frames):
     """Every graded query must expose ONLY scalar output columns: the
     driver's oracle comparator canonicalizes via pandas ``sort_values``
     over all columns, which throws ``unhashable type: 'list'`` on
@@ -211,27 +223,21 @@ def test_registry_wide_scalar_output_surface(spark, sf_dir):
     same contract is enforced there structurally."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    from mistocksync_spark.plans.queries import QUERIES
-
     bad = []
-    for name, fn in QUERIES.items():
-        if "_stream" in name:
-            continue
-        for f in fn(spark, sf_dir).schema.fields:
+    for name, df in registry_frames.items():
+        for f in df.schema.fields:
             if isinstance(f.dataType, (ArrayType, MapType, StructType)):
                 bad.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
     assert not bad, f"non-scalar graded surfaces (driver cannot grade): {bad}"
 
 
-def test_registry_wide_no_cartesian_bnlj_budget(spark, sf_dir):
+def test_registry_wide_no_cartesian_bnlj_budget(registry_frames):
     """Registry-wide plan-shape invariant: NO query may plan a
     CartesianProduct, and BroadcastNestedLoopJoin appears only where a
     documented 1-row/bounded scalar frame attaches (budget below,
     default 0) — a new operator that plans an unbudgeted nested loop
     fails here before it can ship.  Streaming queries are exercised by
     their own parity tests (building them starts real streams)."""
-    from mistocksync_spark.plans.queries import QUERIES
-
     # every entry is a 1-row or bounded-frame crossJoin(broadcast(...))
     # attach: totals, thresholds, recall-reference frames
     bnlj_budget = {
@@ -281,10 +287,8 @@ def test_registry_wide_no_cartesian_bnlj_budget(spark, sf_dir):
         "tombstone_purge_emission": 1,
     }
     failures = []
-    for name, fn in QUERIES.items():
-        if "_stream" in name:
-            continue
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for name, df in registry_frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
         if "CartesianProduct" in plan:
             failures.append(f"{name}: CartesianProduct")
         got = plan.count("BroadcastNestedLoopJoin")

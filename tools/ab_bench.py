@@ -2,13 +2,16 @@
 
 Host timing drifts up to ~2× between sessions, so cross-session medians
 mislead; this tool times N variants of one query INTERLEAVED in a single
-session (A/B/A/B/...), each sample bench-cold (cache + memos cleared, same
+session (A/B/A/B/...), each sample bench-cold (cache + session memo cleared, same
 ``_reset`` as bench.py), materialized through the noop sink.  Output: one
 JSON line per (variant, sample) plus a summary with per-variant medians
 and the pairwise per-round ratios.
 
 Usage:
     python tools/ab_bench.py <variants_module> [sf_dir] [rounds]
+
+``rounds`` defaults to 4: an even count, so each variant runs first in
+half of them.
 
 ``variants_module`` is a python file that defines ``VARIANTS``: a list of
 (label, fn) where fn(spark, sf_dir) -> DataFrame.  A warmup entry
@@ -31,7 +34,7 @@ sys.path.insert(0, REPO)
 def main():
     mod_path = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 4
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     spec = importlib.util.spec_from_file_location("ab_variants", mod_path)

@@ -42,7 +42,9 @@ def memoized(fn):
     simhash vote expressions, which depend only on ``nbits``).  Column
     arguments are keyed by their rendered expression string — two Columns
     that print the same unresolved expression are the same tree
-    semantically; other arguments must be hashable."""
+    semantically; other arguments must be hashable.  Concurrent first
+    callers may each build, but ``setdefault`` keeps the first insert, so
+    every caller gets the same object."""
     memo: dict = {}
 
     @functools.wraps(fn)
@@ -58,7 +60,7 @@ def memoized(fn):
             tuple(sorted((k, _key_part(v)) for k, v in kwargs.items())),
         )
         if key not in memo:
-            memo[key] = fn(*args, **kwargs)
+            return memo.setdefault(key, fn(*args, **kwargs))
         return memo[key]
 
     return wrapper

@@ -14,7 +14,6 @@ from typing import Callable
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
@@ -85,17 +84,3 @@ def similarity(a: Column, b: Column, skip_below: float | None = None) -> Column:
         _ratio_at[skip_below] = pandas_udf(_make_ratio_batch(skip_below), returnType=DoubleType())
     return _ratio_at[skip_below](a, b)
 
-
-def jaccard_3gram(a: Column, b: Column) -> Column:
-    """Cheap JVM-side 3-gram Jaccard — used as a *blocking* prefilter before
-    the exact pandas-UDF similarity at scale (not a reference function)."""
-    def grams(c: Column) -> Column:
-        low = F.lower(c)
-        n = F.length(low) - 2
-        idx = F.sequence(F.lit(1), F.greatest(n, F.lit(1)))
-        return F.array_distinct(F.transform(idx, lambda i: F.substring(low, i, 3)))
-
-    ga, gb = grams(a), grams(b)
-    inter = F.size(F.array_intersect(ga, gb)).cast("double")
-    union = F.size(F.array_union(ga, gb)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))

@@ -96,21 +96,6 @@ def perform_comparison(
         residual, code_matches, key="article", matched_key="supplier_article"
     )
 
-    # supplier_total = deduped supplier keys = matches + new_items
-    m = stage1["matches"].agg(F.count("*").alias("matches"))
-    n = new_items.agg(F.count("*").alias("new_items"))
-    summary = m.crossJoin(n).select(
-        (F.col("matches") + F.col("new_items")).alias("supplier_total"),
-        "matches",
-        "new_items",
-        F.when(
-            (F.col("matches") + F.col("new_items")) > 0,
-            F.col("matches") * 100.0 / (F.col("matches") + F.col("new_items")),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("match_rate"),
-    )
-
     return {
         "matches": stage1["matches"],
         "price_changes": stage1["price_changes"],
@@ -118,5 +103,5 @@ def perform_comparison(
         "bracket_matches": bracket_matches,
         "code_matches": code_matches,
         "new_items_for_base": residual,
-        "summary": summary,
+        "summary": matching.comparison_summary(stage1["matches"], new_items),
     }

@@ -2,22 +2,18 @@
 
 The reference runs an O(n·m) nested Python loop of
 ``difflib.SequenceMatcher.ratio()`` calls (main.py:2878-2898, 4647-4692).
-Spark-first shape:
+Spark-first shape, one ``blocking`` mode per job:
 
-  candidates × base  →  (optional JVM-side blocking prefilter)
-                     →  Arrow-batched pandas-UDF similarity score
-                     →  max_by aggregation keeps the best base row
-                        (map-side partial agg: the shuffle carries one row
-                        per candidate per partition, never the scored pairs)
-
-Blocking is the scale story: a full cross join is quadratic, so at scale we
-prefilter pairs with a cheap JVM-side 3-gram Jaccard (`jaccard_3gram`) or a
-shared-3-gram equi-join (`blocking="ngram"`), which turns the cross join
-into an equi-join on shingles — the standard entity-resolution pattern.
-The exact difflib score is only computed for surviving pairs, preserving
-reference semantics whenever the true best match shares ≥1 trigram (with
-``sim ≥ 0.33`` and realistic names this always holds; ``blocking="none"``
-gives exact parity).
+- ``"none"``: candidates × base cross join → JVM length-band filter →
+  Arrow-batched pandas-UDF score → ``max_by`` keeps the best base row
+  (map-side partial agg: the shuffle carries one row per candidate per
+  partition, never the scored pairs).  The exact reference path.
+- ``"bounded"``: the driver-sized batch path — one ``mapInPandas`` scan of
+  the base names that prunes difflib calls with the quick-ratio upper
+  bound.  Exact.
+- ``"ngram"``: the 100×-scale path — an equi-join on shared trigrams
+  replaces the cross join.  Exact whenever the true best match shares ≥1
+  trigram (with ``sim ≥ 0.33`` and realistic names this always holds).
 
 Tie-breaking: the reference keeps the *first* base row among equal ratios
 (strict ``>`` update), reproduced by ordering on (ratio desc, base_order asc).
@@ -103,12 +99,11 @@ def fuzzy_candidate_pairs(
     candidate_order: str = "supplier_index",
     base_order: str = "row_id",
     threshold: float = FUZZY_THRESHOLD,
-    blocking: str = "none",
 ) -> DataFrame:
-    """The (candidate × base) pairs that reach the Python scorer: blocking
-    join + JVM length-band prefilter, NO similarity UDF.  Used by
-    ``fuzzy_best_match`` and by the bench to report the scored-pair count
-    without paying for scoring twice.
+    """The (candidate × base) pairs that reach the Python scorer on the
+    ``blocking="none"`` path: cross join + JVM length-band prefilter, NO
+    similarity UDF.  Used by ``fuzzy_best_match`` and by the bench to report
+    the scored-pair count without paying for scoring twice.
     """
     cand, bs = _prep_sides(
         candidates,
@@ -118,38 +113,7 @@ def fuzzy_candidate_pairs(
         candidate_order=candidate_order,
         base_order=base_order,
     )
-
-    if blocking == "ngram":
-        # Equi-join on shared trigrams instead of a cross join: candidate
-        # pairs must share at least one trigram.  Distinct pair ids, then
-        # re-attach payloads — shuffles on small keys, never quadratic.
-        # Right at 100 TB-scale candidate sets; for small candidate batches
-        # the bounded mapInPandas path below is faster (the trigram join is
-        # skew-bound on stop-grams).
-        #
-        # The candidate side is referenced twice (shingle keys + payload
-        # re-attach); checkpoint it so its upstream lineage (e.g. the full
-        # matching cascade) is materialized once, not inlined per reference.
-        cand = cand.localCheckpoint(eager=False)
-        ck = cand.select("supplier_index", F.explode(_ngram_keys(F.col("supplier_name"))).alias("g"))
-        bk = bs.select("base_index", F.explode(_ngram_keys(F.col("base_name"))).alias("g"))
-        pair_ids = ck.join(bk, on="g").select("supplier_index", "base_index").distinct()
-        pairs = pair_ids.join(cand, on="supplier_index").join(bs, on="base_index")
-    elif blocking == "broadcast":
-        # Small candidate side: broadcast nested-loop join, exact semantics;
-        # the UDF's quick-ratio upper-bound cutoff does the pruning instead
-        # of a blocking key.  The probe side is spread across all cores —
-        # a small parquet scan arrives as 1 partition, which would serialize
-        # the Python scoring.  HASH partitioning, not round-robin: a
-        # round-robin stride can alias with periodic patterns in the data
-        # (name families repeating every k rows), concentrating the
-        # expensive-to-score strings on a few tasks; hashing decorrelates.
-        spread = bs.repartition(
-            bs.sparkSession.sparkContext.defaultParallelism, F.col("base_index")
-        )
-        pairs = F.broadcast(cand).crossJoin(spread)
-    else:
-        pairs = cand.crossJoin(bs)
+    pairs = cand.crossJoin(bs)
 
     # JVM-side exact prefilter: difflib's ratio() is bounded above by
     # 2*min(|a|,|b|)/(|a|+|b|), so pairs failing the length-band test can
@@ -307,7 +271,11 @@ def fuzzy_best_match(
     vectorized quick-ratio upper bound (see ``_bounded_partition_scorer``);
     the shuffle then carries only one partial best per candidate per
     partition.  At 100× candidate volume switch to ``blocking='ngram'``.
+    ``blocking='none'`` scores every length-band pair (the exact reference
+    path).  Any other value raises ``ValueError``.
     """
+    if blocking not in ("none", "bounded", "ngram"):
+        raise ValueError(f"blocking must be 'none', 'bounded' or 'ngram', got {blocking!r}")
     if blocking in ("bounded", "ngram"):
         # SCORE DISTINCT NAMES, NOT ROWS (round-11): the similarity and the
         # winning base row are pure functions of the NAME PAIR (ties break
@@ -357,7 +325,10 @@ def fuzzy_best_match(
         if blocking == "bounded":
             cand_rows = [r.asDict() for r in sup_reps.collect()]
             # spread the aggregated name table across the cores for the
-            # Python stage (hash, not round-robin — see the broadcast note)
+            # Python stage.  HASH partitioning, not round-robin: a
+            # round-robin stride can alias with periodic patterns in the
+            # data (name families repeating every k rows), concentrating
+            # the expensive-to-score strings on a few tasks.
             spread = base_reps.repartition(
                 bs.sparkSession.sparkContext.defaultParallelism, F.col("base_index")
             ).select("base_index", "base_name", "base_price", "base_article", "base_color")
@@ -414,7 +385,6 @@ def fuzzy_best_match(
         candidate_order=candidate_order,
         base_order=base_order,
         threshold=threshold,
-        blocking=blocking,
     ).withColumn(
         "similarity_ratio",
         similarity(F.col("supplier_name"), F.col("base_name"), skip_below=threshold),

@@ -11,7 +11,7 @@ window (``dedupe_last``), because Spark joins would otherwise multiply rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mistocksync_spark.functions.cleaning import strip_ws
@@ -62,7 +62,6 @@ def exact_article_match(
     base_price: str,
     supplier_order: str = "row_id",
     base_order: str = "row_id",
-    broadcast_supplier: bool = True,
 ) -> dict[str, DataFrame]:
     """J1: exact match on the normalized article key.
 
@@ -110,8 +109,7 @@ def exact_article_match(
     # plan, so the broadcast-strategy plan tests still see them.
     sup_kv = sup_kv.localCheckpoint(eager=False)
     base_kv = base_kv.localCheckpoint(eager=False)
-    left = F.broadcast(sup_kv) if broadcast_supplier else sup_kv
-    joined = left.join(base_kv, on="article", how="inner")
+    joined = F.broadcast(sup_kv).join(base_kv, on="article", how="inner")
 
     matches = joined.select(
         "article",
@@ -196,26 +194,20 @@ def price_update_join(
     )
 
 
-def comparison_summary(
-    supplier_total: DataFrame, matches: DataFrame, new_items: DataFrame
-) -> DataFrame:
+def comparison_summary(matches: DataFrame, new_items: DataFrame) -> DataFrame:
     """A2: one-row summary with match_rate = matches/supplier_total*100
-    (ref main.py:1120-1133)."""
-    s = supplier_total.agg(F.count("*").alias("supplier_total"))
+    (ref main.py:1120-1133).  supplier_total = deduped supplier keys =
+    matches + new_items."""
     m = matches.agg(F.count("*").alias("matches"))
     n = new_items.agg(F.count("*").alias("new_items"))
-    return (
-        s.crossJoin(m)
-        .crossJoin(n)
-        .select(
-            "supplier_total",
-            "matches",
-            "new_items",
-            F.when(
-                F.col("supplier_total") > 0,
-                F.col("matches") / F.col("supplier_total") * 100.0,
-            )
-            .otherwise(F.lit(0.0))
-            .alias("match_rate"),
+    return m.crossJoin(n).select(
+        (F.col("matches") + F.col("new_items")).alias("supplier_total"),
+        "matches",
+        "new_items",
+        F.when(
+            (F.col("matches") + F.col("new_items")) > 0,
+            F.col("matches") * 100.0 / (F.col("matches") + F.col("new_items")),
         )
+        .otherwise(F.lit(0.0))
+        .alias("match_rate"),
     )

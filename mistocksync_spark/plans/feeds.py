@@ -234,13 +234,15 @@ _SESSION_MEMO: dict = {}
 def session_memo(fn):
     """Decorator for ``fn(spark, sf_dir, *args, **kwargs)`` builders: the
     first call per (fn, session, sf_dir, remaining args as passed) builds,
-    later calls return the same object until ``session_memo_clear()``."""
+    later calls return the same object until ``session_memo_clear()``.
+    Concurrent first callers may each build, but ``setdefault`` keeps the
+    first insert, so every caller gets the same object."""
 
     @functools.wraps(fn)
     def wrapper(spark, sf_dir: str, *args, **kwargs):
         key = (fn, spark, sf_dir, args, tuple(sorted(kwargs.items())))
         if key not in _SESSION_MEMO:
-            _SESSION_MEMO[key] = fn(spark, sf_dir, *args, **kwargs)
+            return _SESSION_MEMO.setdefault(key, fn(spark, sf_dir, *args, **kwargs))
         return _SESSION_MEMO[key]
 
     return wrapper

@@ -387,23 +387,7 @@ def new_items_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def comparison_summary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = _j1(spark, sf_dir)
-    # supplier_total = deduped supplier keys = matches + new_items
-    m = r["matches"].agg(F.count("*").alias("matches"))
-    n = r["new_items"].agg(F.count("*").alias("new_items"))
-    return (
-        m.crossJoin(n)
-        .select(
-            (F.col("matches") + F.col("new_items")).alias("supplier_total"),
-            "matches",
-            "new_items",
-            F.when(
-                (F.col("matches") + F.col("new_items")) > 0,
-                F.col("matches") * 100.0 / (F.col("matches") + F.col("new_items")),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("match_rate"),
-        )
-    )
+    return matching.comparison_summary(r["matches"], r["new_items"])
 
 
 # --------------------------------------------------------------------------
@@ -711,8 +695,7 @@ def fuzzy_match_pair_count(spark: SparkSession, sf_dir: str) -> int:
     """Candidate×base pairs after the length-band prefilter — an UPPER BOUND
     on the pairs the Python scorer evaluates: ``fuzzy_match`` runs the
     ``bounded`` blocking path, whose vectorized quick-ratio bound skips
-    difflib for most of these (round-4 advisory: the broadcast-path count no
-    longer described the measured workload).  Not a registered query — the
+    difflib for most of these.  Not a registered query — the
     bench reports it alongside the timing so the workload scale is
     explicit."""
     from mistocksync_spark.operators.fuzzy import fuzzy_candidate_pairs
@@ -728,17 +711,17 @@ def fuzzy_match_pair_count(spark: SparkSession, sf_dir: str) -> int:
         base_feed(spark, sf_dir),
         candidate_name="name",
         candidate_order="cand_order",
-        blocking="broadcast",
     ).count()
 
 
 @query("fuzzy_match_ngram")
 def fuzzy_match_ngram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100×-scale fuzzy path: shared-trigram equi-join blocking instead
-    of the broadcast cross join (same difflib scoring and tie-breaking).
+    of the cross join (same difflib scoring and tie-breaking).
     Registered so the blocking switchover is driver-checked (rows-only —
     difflib is not SQL-expressible) and benched as a scale-path entry;
-    tests/test_fuzzy.py asserts result parity with ``blocking='broadcast'``."""
+    tests/test_fuzzy.py asserts result parity with the exact paths
+    (``blocking='none'`` and the registered ``'bounded'`` batch)."""
     from mistocksync_spark.operators.fuzzy import fuzzy_best_match
 
     r = _cascade_hot(spark, sf_dir)
@@ -1861,11 +1844,8 @@ def incremental_dedup_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pristine per run (the stream mutates state, so runs can't share one
     live copy).  Decisions are unchanged — the copied state is
     bit-identical to what the per-call setup built."""
-    import hashlib
     import os
-    import shutil
     import tempfile
-    import time
 
     from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
     from mistocksync_spark.streaming.merge import (
@@ -1883,23 +1863,8 @@ def incremental_dedup_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda r: prime_corpus_dedup_state(docs_incr_corpus(spark, sf_dir), r),
     )
     state_dir = os.path.join(work, "state")
-    shutil.copytree(root, state_dir)
-    os.remove(os.path.join(state_dir, "_STATE_READY"))
-    arrivals = os.path.join(work, "arrivals")
-    os.makedirs(arrivals)
-    batch = docs_incr_batch(spark, sf_dir)
-    # two id-ordered arrival files; ascending mtimes pin the file-source
-    # processing order (FileStreamSource orders by modification time)
-    now = time.time()
-    for i, (lo, hi) in enumerate([(0, 4_500_000), (4_500_000, 10_000_000)]):
-        part_dir = os.path.join(work, f"part{i}")
-        batch.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).coalesce(1).write.parquet(part_dir)
-        src = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-        dst = os.path.join(arrivals, f"arrivals_{i}.parquet")
-        os.rename(os.path.join(part_dir, src), dst)
-        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
+    _pristine_copy(root, state_dir)
+    arrivals = _stage_arrivals(docs_incr_batch(spark, sf_dir), "doc_id", 4_500_000, work)
     return incremental_corpus_dedup(
         spark,
         None,  # state primed above (produce-once root, pristine copy)
@@ -2600,12 +2565,9 @@ def incremental_embedding_dedup_ivf_stream_q(
     a JSON sidecar, exact float round-trip) and COPIED pristine per run
     — the stream mutates state, so runs can't share one live copy.
     Accepted sets are unchanged."""
-    import hashlib
     import json as _json
     import os
-    import shutil
     import tempfile
-    import time
 
     from mistocksync_spark.operators.vectors import inferred_dim, ivf_train
     from mistocksync_spark.plans.feeds import emb_incr_batch, emb_incr_corpus
@@ -2637,22 +2599,9 @@ def incremental_embedding_dedup_ivf_stream_q(
         q = _json.load(qf)
     cents, dim = q["centroids"], q["dim"]
     state_dir = os.path.join(work, "state")
-    shutil.copytree(root, state_dir)
-    os.remove(os.path.join(state_dir, "_STATE_READY"))
+    _pristine_copy(root, state_dir)
     os.remove(os.path.join(state_dir, "_quantizer.json"))
-    arrivals = os.path.join(work, "arrivals")
-    os.makedirs(arrivals)
-    batch = emb_incr_batch(spark, sf_dir)
-    now = time.time()
-    for i, (lo, hi) in enumerate([(0, 3_500_000), (3_500_000, 10_000_000)]):
-        part_dir = os.path.join(work, f"part{i}")
-        batch.filter(
-            (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-        ).coalesce(1).write.parquet(part_dir)
-        src = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-        dst = os.path.join(arrivals, f"arrivals_{i}.parquet")
-        os.rename(os.path.join(part_dir, src), dst)
-        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
+    arrivals = _stage_arrivals(emb_incr_batch(spark, sf_dir), "vec_id", 3_500_000, work)
     return incremental_embedding_dedup_stream(
         spark,
         None,  # state primed above (produce-once root, pristine copy)
@@ -8934,7 +8883,7 @@ def _produce_once_root(base: str, name: str, sf_dir: str, tag: str, build) -> st
     derived from per-run inputs — every ``@query`` body recomputes its
     declared result from the parquet inputs on every call, and the prime
     cost stays on the bench record (the first cold sample of a fresh root
-    pays ``build``).  Mutating entries must ``shutil.copytree`` the
+    pays ``build``).  Mutating entries must ``_pristine_copy`` the
     pristine root per run and mutate the copy; read-only entries may read
     the root in place.
 
@@ -8955,6 +8904,39 @@ def _produce_once_root(base: str, name: str, sf_dir: str, tag: str, build) -> st
         with open(marker, "w") as mf:
             mf.write(tag)
     return root
+
+
+def _pristine_copy(root: str, dst: str) -> None:
+    """Copy a produce-once root to ``dst`` for a run to mutate, minus the
+    ``_STATE_READY`` marker (the copy is live state, not a committed
+    root).  ``dst`` must not exist."""
+    import os
+    import shutil
+
+    shutil.copytree(root, dst)
+    os.remove(os.path.join(dst, "_STATE_READY"))
+
+
+def _stage_arrivals(batch: DataFrame, id_col: str, cut, work: str) -> str:
+    """Write ``batch`` as the two id-ordered arrival files a stream entry
+    consumes, ``id_col <= cut`` then ``id_col > cut`` — a partition of the
+    batch, so no non-null id falls outside both micro-batches.  Ascending
+    mtimes pin the file-source processing order (FileStreamSource orders by
+    modification time).  Returns the arrivals directory under ``work``."""
+    import os
+    import time
+
+    arrivals = os.path.join(work, "arrivals")
+    os.makedirs(arrivals)
+    now = time.time()
+    for i, pred in enumerate([F.col(id_col) <= cut, F.col(id_col) > cut]):
+        part_dir = os.path.join(work, f"part{i}")
+        batch.filter(pred).coalesce(1).write.parquet(part_dir)
+        src = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
+        dst = os.path.join(arrivals, f"arrivals_{i}.parquet")
+        os.rename(os.path.join(part_dir, src), dst)
+        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
+    return arrivals
 
 
 @query(
@@ -10301,11 +10283,8 @@ def _run_prepare_stream(
     The copy is I/O-bounded (~state size) vs ~40 s of corpus-scale
     Spark recompute per graded call; decisions are unchanged because
     the copied state is bit-identical to what the setup built."""
-    import hashlib
     import os
-    import shutil
     import tempfile
-    import time
 
     from mistocksync_spark.plans.feeds import docs_incr_batch, docs_incr_corpus
     from mistocksync_spark.streaming.merge import (
@@ -10328,24 +10307,12 @@ def _run_prepare_stream(
         ),
     )
     state_dir = os.path.join(work, "state")
-    shutil.copytree(root, state_dir)
-    os.remove(os.path.join(state_dir, "_STATE_READY"))
-    arrivals = os.path.join(work, "arrivals")
-    os.makedirs(arrivals)
+    _pristine_copy(root, state_dir)
     batch = docs_incr_batch(spark, sf_dir).localCheckpoint(eager=False)
-    # id-ordered halves split at the OBSERVED median (r13 ADVICE: the old
-    # hardcoded 0/4.5M/10M cuts silently dropped arrivals whenever the
-    # corpus's id offsets moved); <=cut / >cut is a partition of the
-    # batch, so no row can fall outside the two micro-batches
+    # split at the OBSERVED median, so the halves follow the corpus's id
+    # offsets instead of a fixed cut
     cut = batch.agg(F.expr("percentile(doc_id, 0.5)").alias("c")).collect()[0].c
-    now = time.time()
-    for i, pred in enumerate([F.col("doc_id") <= cut, F.col("doc_id") > cut]):
-        part_dir = os.path.join(work, f"part{i}")
-        batch.filter(pred).coalesce(1).write.parquet(part_dir)
-        src = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-        dst = os.path.join(arrivals, f"arrivals_{i}.parquet")
-        os.rename(os.path.join(part_dir, src), dst)
-        os.utime(dst, (now - 120 + 60 * i, now - 120 + 60 * i))
+    arrivals = _stage_arrivals(batch, "doc_id", cut, work)
     return incremental_prepare_stream(
         spark,
         None,  # state primed above (produce-once root, pristine copy)
@@ -10497,8 +10464,7 @@ def tombstone_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     work = tempfile.mkdtemp(prefix="tombstone_purge_")
     shutil.rmtree(work)
-    shutil.copytree(root, work)
-    os.remove(os.path.join(work, "_STATE_READY"))
+    _pristine_copy(root, work)
     p_docs = os.path.join(work, "docs")
     p_dig = os.path.join(work, "digest_keepers")
     # the deletion request, derived from the standing store's own rows
@@ -10698,8 +10664,7 @@ def vector_purge_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, dim = q["centroids"], q["dim"]
     work = tempfile.mkdtemp(prefix="vector_purge_")
     shutil.rmtree(work)
-    shutil.copytree(root, work)
-    os.remove(os.path.join(work, "_STATE_READY"))
+    _pristine_copy(root, work)
     os.remove(os.path.join(work, "_quantizer.json"))
     p_vecs = os.path.join(work, "vecs")
     p_cells = os.path.join(work, "cells")
@@ -10993,8 +10958,7 @@ def purge_remediation_emission_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     work = tempfile.mkdtemp(prefix="purge_remediation_")
     shutil.rmtree(work)
-    shutil.copytree(root, work)
-    os.remove(os.path.join(work, "_STATE_READY"))
+    _pristine_copy(root, work)
     shutil.rmtree(os.path.join(work, "vocab"))  # rebuilt post-purge here
     p_docs = os.path.join(work, "docs")
     p_dig = os.path.join(work, "digest_keepers")

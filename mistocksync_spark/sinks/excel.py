@@ -10,9 +10,9 @@ them into an ``.xlsx`` file:
 - ``write_report_xlsx``: collects each sheet (reports are small
   aggregates by construction — a hard row-cap guards the Excel format
   limit) and writes one workbook with the reference's Russian sheet
-  names.  Uses openpyxl when installed; otherwise falls back to a
-  dependency-free stdlib writer (an xlsx is a zip of XML parts), so the
-  file surface works even in minimal environments.
+  names with a dependency-free stdlib writer (an xlsx is a zip of XML
+  parts, inline strings, no styling) — the one codec in every
+  environment, mirrored by sources/reader.py's parser.
 - ``update_prices_inplace``: S12's formatting-preserving point writes
   into an EXISTING workbook.  Rewriting arbitrary styled workbooks
   safely requires openpyxl, so this one is environment-gated.
@@ -132,27 +132,6 @@ def _write_xlsx_stdlib(path: str, sheets: list[tuple[str, list[str], list[tuple]
             z.writestr(f"xl/worksheets/sheet{i + 1}.xml", _sheet_xml(header, rows))
 
 
-def _write_xlsx_openpyxl(path: str, sheets: list[tuple[str, list[str], list[tuple]]]) -> None:
-    import openpyxl
-    from openpyxl.styles import Font
-
-    wb = openpyxl.Workbook()
-    wb.remove(wb.active)
-    bold = Font(bold=True)
-    for name, header, rows in sheets:
-        ws = wb.create_sheet(title=name[:31])
-        ws.append(header)
-        for c in ws[1]:
-            c.font = bold
-        for row in rows:
-            ws.append(
-                tuple(
-                    v.isoformat(sep=" ") if isinstance(v, datetime.datetime) else v for v in row
-                )
-            )
-    wb.save(path)
-
-
 def write_report_xlsx(
     sheets: Mapping[str, DataFrame],
     path: str,
@@ -182,10 +161,7 @@ def write_report_xlsx(
     unknown = set(sheets) - set(SHEET_NAMES)
     if unknown:
         raise ValueError(f"unknown sheet keys: {sorted(unknown)}; expected {list(SHEET_NAMES)}")
-    try:
-        _write_xlsx_openpyxl(path, ordered)
-    except ImportError:
-        _write_xlsx_stdlib(path, ordered)
+    _write_xlsx_stdlib(path, ordered)
     return path
 
 
@@ -197,10 +173,7 @@ def write_duplicates_xlsx(audit: DataFrame, path: str, row_cap: int = EXCEL_MAX_
     if len(rows) > row_cap:
         raise ValueError(f"duplicate audit exceeds {row_cap} rows — xlsx cannot hold it")
     sheets = [("Дубликаты артикулов", list(audit.columns), [tuple(r) for r in rows])]
-    try:
-        _write_xlsx_openpyxl(path, sheets)
-    except ImportError:
-        _write_xlsx_stdlib(path, sheets)
+    _write_xlsx_stdlib(path, sheets)
     return path
 
 

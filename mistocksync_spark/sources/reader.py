@@ -7,9 +7,11 @@ DataFrame pipeline, so Catalyst prunes columns at the scan and the casts
 ride inside whole-stage codegen.
 
 Sources: parquet/CSV natively via ``spark.read`` (the scale path); ``.xlsx``
-via a driver-side openpyxl/pandas bridge, gated behind an import-try since
-Excel is inherently a single-file, driver-side surface (a 100 TB deployment
-replaces it with a catalog table — see sinks/merge.py).
+via a driver-side, dependency-free stdlib parser (the mirror of
+sinks/excel.py's writer), since Excel is inherently a single-file,
+driver-side surface (a 100 TB deployment replaces it with a catalog table
+— see sinks/merge.py).  One codec in every environment: a workbook reads
+the same whether or not openpyxl is installed.
 """
 
 from __future__ import annotations
@@ -122,15 +124,14 @@ def validate(df: DataFrame, config: SourceConfig) -> dict:
     return {"ok": True, "price_range_warnings": warnings}
 
 
-def apply_config(df: DataFrame, config: SourceConfig, check: bool = True) -> DataFrame:
+def apply_config(df: DataFrame, config: SourceConfig) -> DataFrame:
     """S1 pipeline: drop-ignored → rename → cast → drop-empty → validate,
     in the reference's order (loader.py:442-469)."""
     df = remove_ignored_columns(df, config)
     df = apply_column_mapping(df, config)
     df = apply_data_types(df, config)
     df = drop_empty_rows(df, config)
-    if check:
-        validate(df, config)
+    validate(df, config)
     return df
 
 
@@ -212,48 +213,39 @@ def _read_xlsx_stdlib(path: str, sheet: int = 0) -> "list[list]":
 
 def read_excel(spark: SparkSession, path: str, config: SourceConfig, sheet: int = 0) -> DataFrame:
     """S1 Excel surface: driver-side bridge (Excel files are small by
-    construction — the reference's workload is 10²-10⁴ rows).  Uses
-    pandas/openpyxl when installed; otherwise a dependency-free stdlib
-    parser (shared/inline strings, numbers, booleans — no style-based
-    date decoding)."""
-    try:
-        import openpyxl  # noqa: F401
-        import pandas as pd
+    construction — the reference's workload is 10²-10⁴ rows) over the
+    stdlib parser (shared/inline strings, numbers, booleans — no
+    style-based date decoding)."""
+    cells = _read_xlsx_stdlib(path, sheet=sheet)
+    if not cells:
+        raise ValueError(f"empty worksheet in {path}")
+    header = [str(h) if h is not None else f"col_{i}" for i, h in enumerate(cells[0])]
+    width = len(header)
+    data = [tuple((r + [None] * width)[:width]) for r in cells[1:]]
 
-        pdf = pd.read_excel(path, sheet_name=sheet)
-        raw = spark.createDataFrame(pdf.astype("object").where(pdf.notna(), None))
-    except ImportError:
-        cells = _read_xlsx_stdlib(path, sheet=sheet)
-        if not cells:
-            raise ValueError(f"empty worksheet in {path}")
-        header = [str(h) if h is not None else f"col_{i}" for i, h in enumerate(cells[0])]
-        width = len(header)
-        data = [tuple((r + [None] * width)[:width]) for r in cells[1:]]
+    # per-column type inference: bigint/double/boolean where every
+    # non-null cell agrees, else string — a typed schema for the columns
+    # the SourceConfig does not cast
+    def _col_type(i: int):
+        vals = [r[i] for r in data if r[i] is not None]
+        if vals and all(isinstance(v, bool) for v in vals):
+            return "boolean", bool
+        if vals and all(isinstance(v, int) and not isinstance(v, bool) for v in vals):
+            return "bigint", int
+        if vals and all(
+            isinstance(v, (int, float)) and not isinstance(v, bool) for v in vals
+        ):
+            return "double", float
+        return "string", str
 
-        # per-column type inference so the fallback yields the same typed
-        # schema as the pandas path (round-2 advisory: an all-string
-        # fallback schema made results differ by environment for columns
-        # the SourceConfig did not cast)
-        def _col_type(i: int):
-            vals = [r[i] for r in data if r[i] is not None]
-            if vals and all(isinstance(v, bool) for v in vals):
-                return "boolean", bool
-            if vals and all(isinstance(v, int) and not isinstance(v, bool) for v in vals):
-                return "bigint", int
-            if vals and all(
-                isinstance(v, (int, float)) and not isinstance(v, bool) for v in vals
-            ):
-                return "double", float
-            return "string", str
-
-        types = [_col_type(i) for i in range(width)]
-        raw = spark.createDataFrame(
-            [
-                tuple(conv(v) if v is not None else None for (_, conv), v in zip(types, r))
-                for r in data
-            ],
-            schema=", ".join(f"`{h}` {t}" for h, (t, _) in zip(header, types)),
-        )
+    types = [_col_type(i) for i in range(width)]
+    raw = spark.createDataFrame(
+        [
+            tuple(conv(v) if v is not None else None for (_, conv), v in zip(types, r))
+            for r in data
+        ],
+        schema=", ".join(f"`{h}` {t}" for h, (t, _) in zip(header, types)),
+    )
     return apply_config(raw, config)
 
 

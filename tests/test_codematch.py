@@ -98,10 +98,9 @@ def test_product_code_brand_grouping(spark):
     assert m[0].capacity_match and m[0].color_match
 
 
-def test_broadcast_lookups_auto_mode(spark):
-    # "auto" gates the lookup broadcast hint on the optimizer's size
-    # estimate: a tiny in-memory base catalog is below the cap, so the
-    # result is identical to the default and the lookups still broadcast.
+def test_code_match_lookups_always_broadcast(spark):
+    # the four pre-aggregated lookups are the build side of a broadcast
+    # hash join, and the tiered pick still returns the matching variant
     from mistocksync_spark.operators.codematch import (
         base_code_variants,
         bracket_code,
@@ -116,7 +115,7 @@ def test_broadcast_lookups_auto_mode(spark):
     )
     sv = supplier_code_variants(sup, bracket_code, "article_vitya")
     bv = base_code_variants(base, bracket_code, "price_vitya_usd")
-    out = code_match(sv, bv, match_type="bracket_code", broadcast_lookups="auto")
+    out = code_match(sv, bv, match_type="bracket_code")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     rows = out.collect()

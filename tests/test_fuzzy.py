@@ -1,6 +1,7 @@
 import difflib
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -96,6 +97,15 @@ def test_fuzzy_tie_break_first_row(spark):
     out = fuzzy_best_match(_cand(spark, [(0, "abcd", 1.0)]), base).collect()
     # equal ratios → first base row wins (strict > in the reference loop)
     assert out[0].base_index == 0
+
+
+@pytest.mark.parametrize("blocking", ["bounde", "broadcast"])
+def test_unknown_blocking_raises(spark, blocking):
+    cands = _cand(spark, [(0, "abcd", 1.0)])
+    with pytest.raises(ValueError, match="blocking"):
+        fuzzy_best_match(cands, _base(spark, BASE_ROWS), blocking=blocking)
+    with pytest.raises(ValueError, match="blocking"):
+        annotate_new_items_with_fuzzy(cands, _base(spark, BASE_ROWS), blocking=blocking)
 
 
 def test_annotate_new_items(spark):

@@ -87,3 +87,9 @@ def test_price_update_join(spark):
     assert abs(out["2"].change_percent - 20.0) < 1e-9
     # old price 0 → 100% (update-path semantics, ref main.py:4274-4277)
     assert out["3"].change_percent == 100.0
+
+
+def test_comparison_summary_on_empty_inputs(spark):
+    r = _match(spark, [], [])
+    out = matching.comparison_summary(r["matches"], r["new_items"]).collect()
+    assert [tuple(row) for row in out] == [(0, 0, 0, 0.0)]

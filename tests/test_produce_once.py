@@ -82,3 +82,17 @@ def test_scratch_root_only_reachable_through_produce_once_helper():
     assert len(callers) == 2, callers
     assert any("_scratch_root(base, h)" in ln for _, ln in callers), callers
     assert any('"/tmp/spark_graft_bucketed"' in ln for _, ln in callers), callers
+
+
+def test_stage_arrivals_partitions_the_batch_at_the_cut(spark, tmp_path):
+    """The two arrival files are ``id <= cut`` then ``id > cut``: every row
+    lands, ids of 10M and above included, and the first file is older."""
+    from mistocksync_spark.plans.queries import _stage_arrivals
+
+    ids = [0, 7, 4_500_000, 4_500_001, 9_999_999, 10_000_000, 12_345_678]
+    batch = spark.createDataFrame([(i, f"d{i}") for i in ids], "doc_id long, text string")
+    arrivals = _stage_arrivals(batch, "doc_id", 4_500_000, str(tmp_path))
+    files = [os.path.join(arrivals, f"arrivals_{i}.parquet") for i in range(2)]
+    halves = [sorted(r.doc_id for r in spark.read.parquet(f).collect()) for f in files]
+    assert halves == [[0, 7, 4_500_000], [4_500_001, 9_999_999, 10_000_000, 12_345_678]]
+    assert os.path.getmtime(files[0]) < os.path.getmtime(files[1])

@@ -55,8 +55,8 @@ def test_reader_required_column_failure(spark, cfg_dir):
 
 
 def test_read_excel_stdlib_roundtrip(spark, cfg_dir, tmp_path):
-    """Writer → reader round trip with no openpyxl: the stdlib xlsx writer
-    (sinks/excel.py) produces a file the stdlib reader path parses."""
+    """Writer → reader round trip: the stdlib xlsx writer (sinks/excel.py)
+    produces a file the stdlib reader parses."""
     from mistocksync_spark.sinks.excel import _write_xlsx_stdlib
     from mistocksync_spark.sources.reader import SourceConfig, read_excel
 
@@ -338,9 +338,9 @@ def test_read_xlsx_stdlib_sheet_order_numeric(tmp_path):
 
 
 def test_read_excel_stdlib_fallback_typed_schema(spark, cfg_dir, tmp_path):
-    """The no-openpyxl fallback must infer bigint/double/string per column
-    (round-2 advisory: an all-string fallback schema made results differ by
-    environment for columns the SourceConfig did not cast)."""
+    """The stdlib reader must infer bigint/double/string per column
+    (round-2 advisory: an all-string schema left the columns the
+    SourceConfig did not cast untyped)."""
     from mistocksync_spark.sinks.excel import _write_xlsx_stdlib
     from mistocksync_spark.sources.reader import SourceConfig, read_excel
 

@@ -6,9 +6,10 @@ same hash as tools/check.py.  Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check import normalize_cell, table_hash  # noqa: E402
 

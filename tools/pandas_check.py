@@ -9,9 +9,10 @@ Usage: python tools/pandas_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def frame_lines(df, cols):
